@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.JobTrace
+
 /** Benchmark main. Two modes:
   *
   *  - PARENT (the driver's invocation, no selection env set): forks
@@ -169,8 +171,7 @@ object Bench {
       def runOnce(i: Int): String =
         runChild("SPARK_GRAFT_BENCH_SHARD" -> s"$i:$n", s"shard $i/$n")
       def spreadOf(line: String): Double =
-        "\"spread\":(-?[0-9.]+)".r.findFirstMatchIn(line)
-          .map(_.group(1).toDouble).getOrElse(-1.0)
+        num(line, "spread").getOrElse(-1.0)
       // the attempt's quieter serial-floor reading; a parse miss
       // reads as the SENTINEL -1 — still gate-pass (never block the
       // artifact on a format surprise) but visibly distinct in the
@@ -179,9 +180,8 @@ object Bench {
       // defense (worst_floor_ms:-1 = "the gate read nothing")
       val floorMiss = -1.0
       def floorOf(line: String): Double = {
-        def g(k: String) = ("\"" + k + "\":(-?[0-9.]+)").r
-          .findFirstMatchIn(line).map(_.group(1).toDouble)
-        val edge = (g("floor_start_ms"), g("floor_end_ms")) match {
+        val edge = (num(line, "floor_start_ms"),
+            num(line, "floor_end_ms")) match {
           case (Some(a), Some(b)) => math.min(a, b)
           case (a, b) => a.orElse(b).getOrElse(floorMiss)
         }
@@ -190,7 +190,7 @@ object Bench {
         // class lived — a loud mid over quiet edges is exactly the
         // blind spot this closes. Missing mid (pre-r19 line) falls
         // back to the edge metric alone.
-        g("floor_mid_ms").fold(edge)(mid =>
+        num(line, "floor_mid_ms").fold(edge)(mid =>
           if (edge == floorMiss) mid else math.max(edge, mid))
       }
       def gateOk(line: String): Boolean = floorOf(line) <= floorBar
@@ -328,37 +328,39 @@ object Bench {
     }
   }
 
-  /** Merge child one-line JSONs. The format is OURS (flat inner
-    * objects, no nested braces), so bounded substring extraction is
-    * exact — no JSON library on the main classpath. */
+  /** The body of `"key":<open>…<close>` in a one-line artifact. The
+    * format is OURS (flat inner objects, no nested braces), so bounded
+    * substring extraction is exact — no JSON library on the main
+    * classpath. */
+  private def inner(line: String, key: String, open: Char = '{',
+      close: Char = '}'): Option[String] = {
+    val k = "\"" + key + "\":" + open
+    val s = line.indexOf(k)
+    if (s < 0) None
+    else Some(line.substring(s + k.length,
+      line.indexOf(close, s + k.length)))
+  }
+
+  /** The first number keyed `key` in a one-line artifact. */
+  private def num(line: String, key: String): Option[Double] =
+    ("\"" + key + "\":(-?[0-9.]+)").r.findFirstMatchIn(line)
+      .map(_.group(1).toDouble)
+
+  /** Merge child one-line JSONs. */
   private def mergeShardLines(lines: Seq[String]): String = {
-    def inner(line: String, key: String, open: Char,
-        close: Char): Option[String] = {
-      val k = "\"" + key + "\":" + open
-      val s = line.indexOf(k)
-      if (s < 0) None
-      else Some(line.substring(s + k.length,
-        line.indexOf(close, s + k.length)))
-    }
-    val qs = lines.flatMap(inner(_, "queries", '{', '}'))
+    val qs = lines.flatMap(inner(_, "queries"))
       .filter(_.nonEmpty).mkString(",")
-    val js = lines.flatMap(inner(_, "jobs", '{', '}'))
+    val js = lines.flatMap(inner(_, "jobs"))
       .filter(_.nonEmpty).mkString(",")
     val errs = lines.flatMap(inner(_, "errors", '[', ']'))
       .filter(_.nonEmpty)
-    val failed = lines.map(l =>
-      "\"failed\":(\\d+)".r.findFirstMatchIn(l)
-        .map(_.group(1).toInt).getOrElse(0)).sum
-    val totals = lines.map(l =>
-      "\"value\":(-?[0-9.]+)".r.findFirstMatchIn(l)
-        .map(_.group(1).toDouble).getOrElse(Double.NaN))
+    val failed = lines.map(num(_, "failed").fold(0)(_.toInt)).sum
+    val totals = lines.map(num(_, "value").getOrElse(Double.NaN))
     val total =
       if (failed > 0 || totals.exists(v => v.isNaN || v < 0)) -1.0
       else totals.sum
-    val cals = lines.map(inner(_, "calibration", '{', '}').getOrElse(""))
-    val spreads = cals.flatMap(c =>
-      "\"spread\":(-?[0-9.]+)".r.findFirstMatchIn(c)
-        .map(_.group(1).toDouble))
+    val cals = lines.map(inner(_, "calibration").getOrElse(""))
+    val spreads = cals.flatMap(num(_, "spread"))
     val maxSpread = if (spreads.isEmpty) -1.0 else spreads.max
     val sf = lines.headOption.flatMap(inner(_, "sf", '"', '"'))
       .getOrElse("")
@@ -418,23 +420,14 @@ object Bench {
             .stripSuffix(".json").toInt)
           .takeRight(3).map(_.getPath)
       }
-    val qre = """"(q[A-Za-z0-9_]*|q1_agg)":(-?[0-9.]+)""".r
-    def queriesOf(line: String): Map[String, Double] = {
-      val k = "\"queries\":{"
-      val s = line.indexOf(k)
-      if (s < 0) Map.empty
-      else qre.findAllMatchIn(
-        line.substring(s + k.length, line.indexOf('}', s + k.length)))
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    }
-    def jobsOfLine(line: String): Map[String, Int] = {
-      val k = "\"jobs\":{"
-      val s = line.indexOf(k)
-      if (s < 0) Map.empty
-      else """"(q[A-Za-z0-9_]*|q1_agg)":(\d+)""".r.findAllMatchIn(
-        line.substring(s + k.length, line.indexOf('}', s + k.length)))
-        .map(m => m.group(1) -> m.group(2).toInt).toMap
-    }
+    def numsOf(line: String, key: String): Map[String, Double] =
+      inner(line, key).fold(Map.empty[String, Double])(
+        """"(q[A-Za-z0-9_]*|q1_agg)":(-?[0-9.]+)""".r.findAllMatchIn(_)
+          .map(m => m.group(1) -> m.group(2).toDouble).toMap)
+    def queriesOf(line: String): Map[String, Double] =
+      numsOf(line, "queries")
+    def jobsOfLine(line: String): Map[String, Int] =
+      numsOf(line, "jobs").map { case (k, v) => k -> v.toInt }
     try {
       val refTexts = refPaths.map(p => new String(
         java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)),
@@ -490,22 +483,15 @@ object Bench {
       // alone (r16: a 2.27 s recheck of a 1.33 s query adjudicated
       // only because the driver's separate capture happened to be
       // quiet)
-      val reCal = {
-        val k = "\"calibration\":{"
-        val s = reLine.indexOf(k)
-        if (s < 0) "" else {
-          val e = reLine.indexOf('}', s + k.length)
-          s""","recheck_cal":${reLine.substring(s + k.length - 1, e + 1)}"""
-        }
-      }
+      val reCal = inner(reLine, "calibration")
+        .fold("")(c => s""","recheck_cal":{$c}""")
       var line = merged
       // with failures present the headline "value" is not a clean sum
       // of per-query times, so leave BOTH the total and the per-query
       // entries untouched (substituting one without the other would
       // ship an artifact whose numbers disagree with each other) —
       // the regressions object still records every recheck reading
-      val hadFail = "\"failed\":(\\d+)".r.findFirstMatchIn(merged)
-        .exists(_.group(1).toInt > 0)
+      val hadFail = num(merged, "failed").exists(_ > 0)
       val shardJobs = jobsOfLine(merged)
       val reJobs = jobsOfLine(reLine)
       val reFloor = floorProbeVals(reLine) match {
@@ -580,13 +566,10 @@ object Bench {
     if (v.isNaN) "-1"
     else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
-  /** Inline mode: the two-pass/min protocol over the (possibly
-    * sliced) suite in THIS JVM. */
-  private def runInline(only: Option[Set[String]],
-      shard: Option[(Int, Int)]): String = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+  /** The bench's session: FIFO, AQE on, one shuffle partition per
+    * core. Shared with [[graft.tools.Diag]], so a decomposition runs on
+    * the session the bench times. */
+  private[graft] def session(): SparkSession = {
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -606,35 +589,37 @@ object Bench {
       builder.config("spark.local.dir", "/dev/shm/graft-spark-local")
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Mean ms of `action` over `reps` timed runs after `warm` untimed. */
+  private[graft] def perActionMs(reps: Int, warm: Int)(
+      action: => Any): Double = {
+    (1 to warm).foreach(_ => action)
+    val t0 = System.nanoTime()
+    (1 to reps).foreach(_ => action)
+    (System.nanoTime() - t0) / 1e6 / reps
+  }
+
+  private[graft] val sfDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  private[graft] val cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors().toString)
+
+  /** Inline mode: the two-pass/min protocol over the (possibly
+    * sliced) suite in THIS JVM. */
+  private def runInline(only: Option[Set[String]],
+      shard: Option[(Int, Int)]): String = {
+    val spark = session()
     warmup(spark, sfDir)
     val errors = scala.collection.mutable.ArrayBuffer.empty[String]
     // per-query JOB COUNTS (r19 verdict #2): the denominator of the
     // floor-adjusted regression metric — a round-count-dominated
     // query's wall is ~ jobs × serial floor, so the regression
     // adjudicator can subtract the measured floor LIFT × jobs and
-    // emit a ratio the box noise cannot inflate. Counted via
-    // listener; the bus is async, so each reading settles by polling
-    // until stable (typically one 5 ms round — outside the timed
-    // window).
-    val jobCounter = new org.apache.spark.scheduler.SparkListener {
-      val n = new java.util.concurrent.atomic.AtomicInteger(0)
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        { n.incrementAndGet(); () }
-    }
-    spark.sparkContext.addSparkListener(jobCounter)
-    // settle bounded at 10 polls (r20 verdict #1c: worst-case settling
-    // cost must stay negligible against the suite — 50 ms/site hard
-    // cap, and the sites only exist in pass 1 now)
-    def settledJobCount(): Int = {
-      var last = -1
-      var cur = jobCounter.n.get()
-      var i = 0
-      while (cur != last && i < 10) {
-        last = cur; Thread.sleep(5); cur = jobCounter.n.get(); i += 1
-      }
-      cur
-    }
+    // emit a ratio the box noise cannot inflate. Recorded by a
+    // JobTrace around the query; it drains after the timed window.
     val jobsOf = scala.collection.mutable.Map.empty[String, Int]
     // NaN on failure — never the elapsed time of the exception path. A
     // crashing query must not masquerade as a fast timing (and with the
@@ -680,11 +665,14 @@ object Bench {
       suite.map { case (name, fn) =>
         // job counts are deterministic per query — counted in pass 1
         // only (the p2/repeat samples would just re-measure the same
-        // number while paying the settle polls again)
-        val countJobs = tag == "p1"
-        val j0 = if (countJobs) settledJobCount() else 0
-        val t1 = time(s"$name/$tag", fn)
-        if (countJobs && !t1.isNaN) jobsOf(name) = settledJobCount() - j0
+        // number)
+        val t1 =
+          if (tag != "p1") time(s"$name/$tag", fn)
+          else {
+            val (t, trace) = JobTrace.of(spark)(time(s"$name/$tag", fn))
+            if (!t.isNaN) jobsOf(name) = trace.jobs
+            t
+          }
         val t = if (t1.isNaN || t1 > 2.0) t1
                 else math.min(t1, time(s"$name/$tag-rep", fn))
         System.err.println(f"bench [$tag] $name%-30s $t%8.3f s")
@@ -707,12 +695,8 @@ object Bench {
     // dominated query read 1.5-3x, and the mechanism (a ~2x drift of
     // exactly this floor) was only visible via ad-hoc measurement.
     // Stamped per shard so the next drift adjudicates from artifacts.
-    def floorProbe(): Double = {
-      (1 to 5).foreach(_ => spark.range(1).count())
-      val t0 = System.nanoTime()
-      (1 to 20).foreach(_ => spark.range(1).count())
-      (System.nanoTime() - t0) / 20e6 // per-action ms
-    }
+    def floorProbe(): Double =
+      perActionMs(reps = 20, warm = 5)(spark.range(1).count())
     def gcMs: Long = {
       import scala.jdk.CollectionConverters._
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
@@ -822,9 +806,9 @@ object Bench {
       // Warm the array-lambda codegen family (cosine fold, signature
       // bands, array_contains CC probes): the embedding/image
       // dedup/ANN queries otherwise pay the catalog's most expensive
-      // first-compile inside their timed window — BenchDiag measured
-      // 51.7 s of summed task time on q_embed_dedup_clusters' COLD
-      // run vs 2.5 s warmed, and the 2.0–2.5 s readings that kept
+      // first-compile inside their timed window — a decomposition
+      // (`graft.tools.Diag`) measured 51.7 s of summed task time on
+      // q_embed_dedup_clusters' COLD run vs 2.5 s warmed, and the 2.0–2.5 s readings that kept
       // q_image_dedup_clusters on the regression list for four
       // rounds are exactly this class (SCALE.md r20). 300 rows keep
       // the warm pass sub-second.

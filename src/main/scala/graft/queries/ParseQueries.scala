@@ -5,7 +5,7 @@ import org.apache.spark.sql.types.LongType
 import graft.abi.Keccak256
 import graft.core.Tables
 import graft.functions.hashBucket
-import graft.parse.{ContractCatalog, ParseRunner}
+import graft.parse.{ContractCatalog, ParseRunner, ParseTask}
 import graft.sources.EvmFixtures
 
 /** Corpus-wide parse stage (SURVEY §2.9/§3.2 + `parser.py:64-117`):
@@ -20,6 +20,14 @@ import graft.sources.EvmFixtures
 object ParseQueries extends QueryGroup {
 
   val CorpusDir = "/root/reference/dags/resources/contracts/ethereum"
+
+  /** The corpus parse tasks with these table names, in order; a missing
+    * one fails naming the corpus directory it should come from. */
+  def corpusTasks(names: String*): Seq[ParseTask] = {
+    val all = ParseRunner.tasks(ContractCatalog.fromDirectory(CorpusDir))
+    names.map(n => all.find(_.tableName == n).getOrElse(
+      sys.error(s"ABI corpus not found at $CorpusDir: no task $n")))
+  }
 
   private def pad64(c: org.apache.spark.sql.Column) =
     concat(lit("0x"), lpad(lower(hex(c)), 64, "0"))
@@ -44,12 +52,9 @@ object ParseQueries extends QueryGroup {
                 (l_orderkey % 10000) || ':' || l_partkey,
                 '0xt' || l_orderkey || '_' || l_linenumber
          FROM li WHERE l_linenumber % 3 = 1""") { (spark, dir) =>
-      val tasks = ParseRunner.tasks(ContractCatalog.fromDirectory(CorpusDir))
-      val transfer =
-        tasks.find(_.tableName == "common.erc20_evt_Transfer").get
-      val punkBought = tasks
-        .find(_.tableName == "cryptopunks.CryptoPunksMarket_evt_PunkBought")
-        .get
+      val Seq(transfer, punkBought) = corpusTasks(
+        "common.erc20_evt_Transfer",
+        "cryptopunks.CryptoPunksMarket_evt_PunkBought")
       val punksAddr = punkBought.contract.contractAddress.get.toLowerCase
       val noiseTopic =
         Keccak256.eventTopic("Approval(address,address,uint256)")
@@ -133,8 +138,7 @@ object ParseQueries extends QueryGroup {
     * the intermediate plans. */
   def lifecycle(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
-    val tasks = ParseRunner.tasks(ContractCatalog.fromDirectory(CorpusDir))
-    val transfer = tasks.find(_.tableName == "common.erc20_evt_Transfer").get
+    val Seq(transfer) = corpusTasks("common.erc20_evt_Transfer")
     val noiseTopic = Keccak256.eventTopic("Approval(address,address,uint256)")
 
     // raw (pre-enrich) logs: Transfer topic on every 3rd line, noise

@@ -281,11 +281,11 @@ class AbiCorpusSpec extends AnyFunSuite {
   }
 
   test("known corpus topics: erc20 Transfer + seaport OrderFulfilled") {
-    val erc20 = AbiJson.parseContract(Files.readString(
-      new java.io.File(root, "common/erc20.json").toPath))
-    assert(erc20.contractAddress.isEmpty) // decode-all semantics
-    val transfer = erc20.events.find(_.name == "Transfer").get
-    assert(transfer.topic0 ==
+    val Seq(transfer) = graft.queries.ParseQueries
+      .corpusTasks("common.erc20_evt_Transfer")
+    // decode-all semantics
+    assert(transfer.contract.contractAddress.isEmpty)
+    assert(transfer.event.get.topic0 ==
       "0xddf252ad1be2c89b69c2b068fc378daa952ba7f163c4a11628f55a4df523b3ef")
   }
 }

@@ -11,6 +11,9 @@ Two layers, both must pass:
     representation-level mismatches the driver's value hash catches
     (e.g. Decimal('42') vs 42.0) that layer 1 coerces away.
 
+Every oracle_sql.json entry without an output directory fails as
+"missing": graft.Verify writes no output for a query that throws.
+
 Usage: python3 tools/compare.py <sfDir> <verifyOutDir>
 """
 import json, sys, glob, os
@@ -101,6 +104,10 @@ def main(sf_dir, out_dir):
             continue
         print(f"[ok] {name}: {len(g)} rows")
         n_pass += 1
+    for name in sorted(oracles):
+        if not os.path.isdir(os.path.join(out_dir, name)):
+            print(f"[FAIL missing] {name}: no output directory")
+            n_fail += 1
     print(f"\n{n_pass} pass, {n_fail} fail")
     return 1 if n_fail else 0
 
