@@ -1,11 +1,12 @@
 package graft.parse
 
 import java.nio.file.Files
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 import graft.abi.{AbiEvent, AbiFunction, AbiJson, EvmContract}
-import graft.write.PartitionedWriter
+import graft.core.FanOut
 
 /** Where a parse stage gets its contract list. The reference has two
   * producers of the same shape: the checked-in corpus directory
@@ -183,17 +184,22 @@ object ParseRunner {
     * `{warehouse}/{dataset}/{table}` — partitioned by `dt` when the
     * enriched inputs carry it (the reference's daily INSERT OVERWRITE
     * shape), plain parquet otherwise. Returns (tableName, rowsWritten)
-    * per task, in catalog order.
+    * per task, in catalog order; rowsWritten is what this run's write
+    * wrote, counted by an `Observation` on the written frame inside the
+    * write's own job, not a re-read of the table (which would count
+    * every earlier day too).
     *
-    * Tasks are submitted from a BOUNDED pool of `parallelism` driver
-    * threads into the `graft-parse` FAIR scheduler pool — the
-    * reference runs its 146+490 decode jobs as parallel Airflow tasks
-    * (`parser.py:71-98`, `build_chain_dags.py:14-15` parallelism
-    * knobs); one-at-a-time submission would leave the cluster idle
-    * between small jobs at corpus width. Each task touches only its
-    * own output path and the shared cached inputs, so concurrent
-    * execution is write-disjoint; results are collected back into
-    * catalog order regardless of completion order. */
+    * Tasks are submitted through [[graft.core.FanOut]], from a BOUNDED
+    * pool of `parallelism` driver threads, into the `graft-parse` FAIR
+    * scheduler pool — the reference runs its 146+490 decode jobs as
+    * parallel Airflow tasks (`parser.py:71-98`,
+    * `build_chain_dags.py:14-15` parallelism knobs); one-at-a-time
+    * submission would leave the cluster idle between small jobs at
+    * corpus width. Each task touches only its own output path and the
+    * shared cached inputs, so concurrent execution is write-disjoint.
+    * A failing task is rethrown only after every other task has
+    * finished, so the cached inputs are never unpersisted under a
+    * running decode. */
   def run(spark: SparkSession, catalog: ContractCatalog,
       logs: DataFrame, traces: DataFrame, warehouse: String,
       select: ParseTask => Boolean = _ => true,
@@ -201,37 +207,20 @@ object ParseRunner {
     val selected = tasks(catalog).filter(select)
     // one materialization of the enriched day, shared by every decode
     logs.cache(); traces.cache()
-    try {
-      if (parallelism <= 1 || selected.size <= 1)
-        selected.map(runOne(spark, _, logs, traces, warehouse))
-      else {
-        import java.util.concurrent.Executors
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val pool = Executors.newFixedThreadPool(parallelism)
-        implicit val ec: ExecutionContext =
-          ExecutionContext.fromExecutorService(pool)
-        try {
-          val fs = selected.map { t =>
-            Future {
-              // local property is per-thread: every job this task
-              // submits lands in the shared FAIR pool (no-op when the
-              // context scheduler is FIFO)
-              spark.sparkContext
-                .setLocalProperty("spark.scheduler.pool", "graft-parse")
-              runOne(spark, t, logs, traces, warehouse)
-            }
-          }
-          Await.result(Future.sequence(fs), Duration.Inf)
-        } finally pool.shutdown()
-      }
-    } finally { logs.unpersist(); traces.unpersist() }
+    try FanOut.run(spark, parallelism max 1)(selected.map(t => () => {
+      // every job this task submits lands in the shared FAIR pool
+      // (no-op when the context scheduler is FIFO)
+      spark.sparkContext
+        .setLocalProperty("spark.scheduler.pool", "graft-parse")
+      runOne(t, logs, traces, warehouse)
+    }))
+    finally { logs.unpersist(); traces.unpersist() }
   }
 
-  private def runOne(spark: SparkSession, t: ParseTask,
-      logs: DataFrame, traces: DataFrame,
+  private def runOne(t: ParseTask, logs: DataFrame, traces: DataFrame,
       warehouse: String): (String, Long) = {
-    val df = t.dataFrame(logs, traces)
+    val rows = Observation()
+    val df = t.dataFrame(logs, traces).observe(rows, count(lit(1)).as("n"))
     val path = s"$warehouse/${t.contract.datasetName}/" +
       t.tableName.replace('.', '_')
     if (df.columns.contains("dt"))
@@ -242,10 +231,6 @@ object ParseRunner {
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("dt").parquet(path)
     else df.write.mode("overwrite").parquet(path)
-    // read back with the writer's schema: a zero-row partitioned
-    // write leaves no part files, and schema INFERENCE over the
-    // bare _SUCCESS dir would throw — an empty decode (contract
-    // with no matching events that day) is a 0-count, not a crash
-    t.tableName -> spark.read.schema(df.schema).parquet(path).count()
+    t.tableName -> rows.get("n").asInstanceOf[Long]
   }
 }

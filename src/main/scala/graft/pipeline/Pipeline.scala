@@ -1,7 +1,10 @@
 package graft.pipeline
 
 import java.time.LocalDate
+import scala.util.Try
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.FanOut
 import graft.enrich.Enrich
 import graft.sources.RawTableReader
 import graft.write.PartitionedWriter
@@ -31,8 +34,13 @@ final case class LoadJob(
     sparkResource: graft.core.SparkResource = graft.core.EngineConf.Default) {
 
   def run(raw: Map[String, DataFrame], warehousePath: String,
-      ds: JobDate, filesPerPartition: Int = 1): Unit = {
-    val out = enrich(raw)
+      ds: JobDate, filesPerPartition: Int = 1): Unit =
+    write(enrich(raw), warehousePath, ds, filesPerPartition)
+
+  /** Writes an enriched frame (this loader's [[enrich]] output) into
+    * `{warehousePath}/{resource}`. */
+  def write(out: DataFrame, warehousePath: String, ds: JobDate,
+      filesPerPartition: Int): Unit =
     mode match {
       case LoadJob.Overwrite =>
         PartitionedWriter.overwriteDaily(out, s"$warehousePath/$resource",
@@ -41,7 +49,6 @@ final case class LoadJob(
         PartitionedWriter.append(out, s"$warehousePath/$resource",
           filesPerPartition)
     }
-  }
 }
 
 object LoadJob {
@@ -110,7 +117,19 @@ object EvmLoaders {
   * the loop the enrich joins' contract requires (each pass sees ONE
   * chain-day of blocks, which is why `Enrich.*` may broadcast the
   * blocks side unconditionally; a months-wide blocks frame must never
-  * reach a single pass).
+  * reach a single pass). Days stay serial for that reason, and because
+  * the tokens append derives `tokens_existing` from the warehouse the
+  * previous day left.
+  *
+  * Within a day the loaders fan out, as the reference's per-resource
+  * `enrich_{name}` Airflow tasks do (`blockchain.py:107-111`): every
+  * loader's enrich plan is built on the calling thread, then the writes
+  * are submitted together through [[graft.core.FanOut]], one driver
+  * thread per loader. Each loader writes its own table, so two loaders
+  * with the same `resource` in one call are rejected. A failing loader
+  * does not stop the others: every write of the day finishes, then the
+  * first failure (in loader order) is rethrown with the loader and day
+  * in its message.
   *
   * Re-running a day is idempotent for Overwrite-mode loaders (dynamic
   * partition overwrite replaces just that day); Append-mode loaders
@@ -127,13 +146,30 @@ object Backfill {
       warehousePath: String, from: LocalDate, to: LocalDate,
       filesPerPartition: Int = 1): Seq[JobDate] = {
     require(!to.isBefore(from), s"backfill range inverted: $from..$to")
+    val shared = loaders.groupBy(_.resource).collect {
+      case (r, ls) if ls.size > 1 => r
+    }
+    require(shared.isEmpty,
+      s"backfill: more than one loader writes resource " +
+        s"${shared.toSeq.sorted.mkString(", ")}; loaders of one day write " +
+        "concurrently, so each needs its own table")
     val days = Iterator.iterate(from)(_.plusDays(1))
       .takeWhile(!_.isAfter(to)).map(JobDate(_)).toSeq
     days.foreach { d =>
       val raw = rawForDay(d)
       raw.values.foreach(_.cache())
-      try loaders.foreach(_.run(raw, warehousePath, d, filesPerPartition))
-      finally raw.values.foreach(_.unpersist(false))
+      try {
+        val planned = loaders.map(l => l -> Try(l.enrich(raw)))
+        FanOut.run(SparkSession.active, loaders.size max 1)(planned.map {
+          case (l, out) => () =>
+            try l.write(out.get, warehousePath, d, filesPerPartition)
+            catch {
+              case NonFatal(e) => throw new RuntimeException(
+                s"loader ${l.resource} failed on ${d.dsString}: " +
+                  e.getMessage, e)
+            }
+        })
+      } finally raw.values.foreach(_.unpersist(false))
     }
     days
   }

@@ -1320,28 +1320,14 @@ object WarehouseQueries extends QueryGroup {
         // Compactor scaladoc's 100 TB deployment shape) — run the 14
         // survivors concurrently; each compact is an independent
         // read→write→two-rename swap on its own directory
-        val (nb, na) = {
-          import scala.concurrent.{Await, ExecutionContext, Future}
-          // EXPLICIT parallelism bound (r19 verdict nit): each
-          // Future blocks a thread on a full Spark action, so the
-          // global ExecutionContext's core-count cap is an accident
-          // of where the code runs, not a sizing decision — 8
-          // concurrent per-partition compactions saturate this
-          // box's scheduler, and a 10k-partition vacuum lifting
-          // this pattern must pool-bound, not thread-per-partition
-          val pool = java.util.concurrent.Executors
-            .newFixedThreadPool(math.min(days.size, 8))
-          implicit val ec: ExecutionContext =
-            ExecutionContext.fromExecutorService(pool)
-          try Await.result(
-            Future.traverse(days.toList) { d => Future {
-              val (b, a, _) =
-                graft.write.Compactor.compact(spark, d.toString)
-              (b, a)
-            }},
-            scala.concurrent.duration.Duration.Inf)
-          finally pool.shutdown()
-        }.unzip
+        // EXPLICIT parallelism bound: 8 concurrent per-partition
+        // compactions saturate an 8-core scheduler, and a
+        // 10k-partition vacuum lifting this pattern must pool-bound,
+        // not thread-per-partition
+        val (nb, na) = graft.core.FanOut.run(spark, 8)(days.map(d => () => {
+          val (b, a, _) = graft.write.Compactor.compact(spark, d.toString)
+          (b, a)
+        })).unzip
         // the numFiles-drop pin: day cells are synopsis-sized, so
         // every survivor must compact to exactly one file, from a
         // strictly larger pre-compact count

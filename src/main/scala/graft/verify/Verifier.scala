@@ -1,41 +1,19 @@
 package graft.verify
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's verify DAG (SURVEY §2.4, §5): per-day SQL assertions
   * of the form `if(cond, 1, raise_error(msg))`
   * (`/root/reference/dags/resources/verify/` SQL files). Exposed both
   * ways:
-  *  - [[check]] — typed `Either` result for orchestration;
+  *  - [[runAll]] — typed `Either` results for orchestration;
   *  - [[raiseSql]] — `raise_error` parity (the query itself throws on a
   *    violated invariant, exactly like the reference's Spark SQL).
   */
 object Verifier {
 
   final case class VerifyError(name: String, message: String)
-
-  /** blocks/transactions/logs/traces `_have_latest.sql`: the day's
-    * partition is non-empty. */
-  def haveLatest(df: DataFrame, name: String): Either[VerifyError, Long] = {
-    val n = df.count()
-    if (n > 0) Right(n)
-    else Left(VerifyError(name, s"$name partition is empty"))
-  }
-
-  /** traces_null_address_equal_to_transaction_count.sql: #root traces
-    * (trace_address = '[]') with non-null transaction_hash == #txs. */
-  def rootTraceCountMatches(traces: DataFrame, transactions: DataFrame)
-      : Either[VerifyError, Long] = {
-    val rootTraces = traces
-      .filter(col("trace_address") === "[]" &&
-        col("transaction_hash").isNotNull)
-      .count()
-    val txs = transactions.count()
-    if (rootTraces == txs) Right(txs)
-    else Left(VerifyError("traces_vs_transactions",
-      s"root traces $rootTraces != transactions $txs"))
-  }
 
   /** `raise_error` parity: evaluates `if(cond, 1, raise_error(msg))`
     * over a 1-row aggregate, throwing inside the engine like the
@@ -48,14 +26,39 @@ object Verifier {
         .otherwise(raise_error(lit(msg))).as("ok"))
   }
 
-  /** Run all five reference invariants over enriched frames. */
+  /** The five reference invariants over enriched frames, in this
+    * order:
+    *  - blocks/transactions/logs/traces `_have_latest.sql`: the day's
+    *    partition is non-empty (`Right(rows)`);
+    *  - `traces_null_address_equal_to_transaction_count.sql`: #root
+    *    traces (trace_address = '[]', non-null transaction_hash) ==
+    *    #transactions (`Right(transactions)`).
+    *
+    * All five come from ONE aggregate over the union of the four
+    * tables, tagged by source: one scan of each, one action. */
   def runAll(blocks: DataFrame, transactions: DataFrame, logs: DataFrame,
-      traces: DataFrame): Seq[Either[VerifyError, Long]] = Seq(
-    haveLatest(blocks, "blocks"),
-    haveLatest(transactions, "transactions"),
-    haveLatest(logs, "logs"),
-    haveLatest(traces, "traces"),
-    rootTraceCountMatches(traces, transactions))
+      traces: DataFrame): Seq[Either[VerifyError, Long]] = {
+    val names = Seq("blocks", "transactions", "logs", "traces")
+    def tag(df: DataFrame, t: Int, root: Column = lit(false)) =
+      df.select(lit(t).as("t"), root.as("root"))
+    val tagged = tag(blocks, 0).union(tag(transactions, 1))
+      .union(tag(logs, 2))
+      .union(tag(traces, 3, col("trace_address") === "[]" &&
+        col("transaction_hash").isNotNull))
+    val row = tagged.agg(count(when(col("root"), 1)),
+      names.indices.map(i => count(when(col("t") === i, 1))): _*).first()
+    val rootTraces = row.getLong(0)
+    val rows = names.indices.map(i => row.getLong(i + 1))
+    val haveLatest = names.zip(rows).map { case (name, n) =>
+      if (n > 0) Right(n)
+      else Left(VerifyError(name, s"$name partition is empty"))
+    }
+    val txs = rows(1)
+    haveLatest :+ (
+      if (rootTraces == txs) Right(txs)
+      else Left(VerifyError("traces_vs_transactions",
+        s"root traces $rootTraces != transactions $txs")))
+  }
 
   /** Declarative data-quality constraints (the Deequ shape —
     * Schelter et al. 2018, public AWS research — and the

@@ -37,12 +37,19 @@ object PartitionedWriter {
         // co-locate each (bucket) partition into `filesPerPartition`
         // tasks: hash-partition on the bucket cols plus a row-content
         // split key, so each partition dir gets at most that many files
-        // instead of one per upstream task
+        // instead of one per upstream task. The partition count is
+        // explicit (the session's shuffle partitions): AQE never
+        // coalesces a repartition-by-number, while a by-column one over
+        // a small day folds into ONE task that writes every bucket dir
+        // alone. Rows still route by the bucket cols, so the
+        // files-per-dir bound is unchanged.
         val split =
           if (filesPerPartition <= 1) Nil
           else Seq(pmod(xxhash64(df.columns.toIndexedSeq.map(col): _*),
             lit(filesPerPartition.toLong)))
-        withDt.repartition(extraPartitionCols.map(col) ++ split: _*)
+        withDt.repartition(
+          df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+          extraPartitionCols.map(col) ++ split: _*)
       }
     sized.write
       .mode(SaveMode.Overwrite)

@@ -1425,24 +1425,59 @@ class VerifierSpec extends AnyFunSuite {
     assert(lone.getLong(1) === 0L && lone.getBoolean(2))
   }
 
-  test("all five reference invariants hold on fixtures") {
+  /** enriched blocks, transactions, logs and traces fixtures */
+  private def enriched = {
     val li = Tables.df(spark, sf, "lineitem")
     val o = Tables.df(spark, sf, "orders")
     val ev = Tables.df(spark, sf, "events")
-    val blocks = graft.enrich.Enrich.blocks(EvmFixtures.blocks(o))
-    val txs = graft.enrich.Enrich.transactions(
-      EvmFixtures.transactions(li), EvmFixtures.blocks(o),
-      EvmFixtures.receipts(li))
-    val logs = graft.enrich.Enrich.logs(
-      EvmFixtures.logs(ev), EvmFixtures.blocksForLogs(ev))
-    val traces = graft.enrich.Enrich.traces(
-      EvmFixtures.traces(li), EvmFixtures.blocks(o))
+    (graft.enrich.Enrich.blocks(EvmFixtures.blocks(o)),
+      graft.enrich.Enrich.transactions(
+        EvmFixtures.transactions(li), EvmFixtures.blocks(o),
+        EvmFixtures.receipts(li)),
+      graft.enrich.Enrich.logs(
+        EvmFixtures.logs(ev), EvmFixtures.blocksForLogs(ev)),
+      graft.enrich.Enrich.traces(
+        EvmFixtures.traces(li), EvmFixtures.blocks(o)))
+  }
+
+  test("all five reference invariants hold on fixtures") {
+    val (blocks, txs, logs, traces) = enriched
     val results = Verifier.runAll(blocks, txs, logs, traces)
     // fixture root traces (l_linenumber%3==0, non-null hash) do NOT
     // equal tx count by construction — that invariant must FAIL here,
     // proving the check detects violations; the 4 have_latest pass
-    assert(results.take(4).forall(_.isRight))
-    assert(results.last.isLeft)
+    assert(results.take(4) === Seq(blocks, txs, logs, traces)
+      .map(df => Right(df.count())))
+    val roots = traces.filter(col("trace_address") === "[]" &&
+      col("transaction_hash").isNotNull).count()
+    assert(results.last === Left(Verifier.VerifyError(
+      "traces_vs_transactions",
+      s"root traces $roots != transactions ${txs.count()}")))
+  }
+
+  test("runAll is one aggregate: at most 2 jobs for all five") {
+    // over stored tables, as the daily verify reads the warehouse: the
+    // fixtures' own enrich shuffles would bill jobs to the window
+    val (blocks, txs, logs, traces) = enriched
+    val dir = java.nio.file.Files.createTempDirectory("graft_verify")
+    val Seq(b, tx, l, tr) = Seq(blocks, txs, logs, traces).zipWithIndex
+      .map { case (df, i) =>
+        df.write.parquet(s"$dir/$i")
+        spark.read.parquet(s"$dir/$i")
+      }
+    val (results, t) = graft.core.JobTrace.of(spark)(
+      Verifier.runAll(b, tx, l, tr))
+    assert(results === Verifier.runAll(blocks, txs, logs, traces))
+    assert(t.jobs <= 2, s"runAll ran ${t.jobs} jobs")
+  }
+
+  test("an empty logs partition fails have_latest for logs alone") {
+    val (blocks, txs, logs, traces) = enriched
+    val all = Verifier.runAll(blocks, txs, logs, traces)
+    val noLogs = Verifier.runAll(blocks, txs, logs.limit(0), traces)
+    assert(noLogs(2) === Left(Verifier.VerifyError("logs",
+      "logs partition is empty")))
+    assert(noLogs.patch(2, Nil, 1) === all.patch(2, Nil, 1))
   }
 
   test("raise_error parity throws on empty input") {

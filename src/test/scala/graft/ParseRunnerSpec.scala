@@ -31,6 +31,50 @@ class ParseRunnerSpec extends AnyFunSuite {
     lit("0xa0").as("to_address"),
     lit("0xt0").as("transaction_hash"))
 
+  /** An in-memory one-event catalog: ERC-20 `Transfer`. */
+  private lazy val erc20 = ContractCatalog.inMemory(Seq(
+    """{"contract_name": "erc20", "dataset_name": "common", "abi": [
+      {"type": "event", "name": "Transfer", "anonymous": false,
+       "inputs": [
+        {"indexed": true, "name": "from", "type": "address"},
+        {"indexed": true, "name": "to", "type": "address"},
+        {"indexed": false, "name": "value", "type": "uint256"}]}]}"""))
+
+  /** `n` enriched Transfer logs of day `dt`. */
+  private def transferLogs(n: Int, dt: String) = {
+    val topic0 = ParseRunner.tasks(erc20).head.event.get.topic0
+    spark.range(n).select(
+      array(lit(topic0), format_string("0x%064x", col("id")),
+        format_string("0x%064x", col("id") + 1)).as("topics_arr"),
+      unhex(format_string("%064x", col("id"))).as("unhex_data"),
+      format_string("0xa%d", col("id")).as("address"),
+      format_string("0xt%s_%d", lit(dt), col("id")).as("transaction_hash"),
+      col("id").as("log_index"),
+      col("id").as("block_number"),
+      lit(dt).as("dt"))
+  }
+
+  test("rows written are this run's rows, not the table's") {
+    val wh = java.nio.file.Files.createTempDirectory("graft_whd").toString
+    val table = "common.erc20_evt_Transfer"
+    assert(ParseRunner.run(spark, erc20, transferLogs(3, "2026-05-01"),
+      tracesFixture, wh) === Seq(table -> 3L))
+    // day 2 lands beside day 1; a read-back would report 3 + 5
+    assert(ParseRunner.run(spark, erc20, transferLogs(5, "2026-05-02"),
+      tracesFixture, wh) === Seq(table -> 5L))
+    assert(spark.read.parquet(s"$wh/common/common_erc20_evt_Transfer")
+      .count() === 8L)
+  }
+
+  test("a zero-row decode and a limit(0) input report 0 rows") {
+    def wh() = java.nio.file.Files.createTempDirectory("graft_wh0").toString
+    val noMatch = transferLogs(3, "2026-05-01")
+      .withColumn("topics_arr", array(lit("0x0")))
+    for (logs <- Seq(noMatch, transferLogs(3, "2026-05-01").limit(0)))
+      assert(ParseRunner.run(spark, erc20, logs, tracesFixture, wh()) ===
+        Seq("common.erc20_evt_Transfer" -> 0L))
+  }
+
   test("every corpus element becomes a buildable decode job") {
     assume(new java.io.File(ParseQueries.CorpusDir).exists())
     val tasks = ParseRunner.tasks(catalog)
